@@ -56,7 +56,8 @@ def main() -> None:
         "o_custkey", F.col("o_custkey") + 1_000_000
     )
     t.merge(wave1, on=["o_orderkey"],
-            clause=MergeClause(matched_update={"o_custkey": "s.o_custkey"}))
+            clause=MergeClause(matched_update={"o_custkey": "s.o_custkey"}),
+            mode="copy-on-write")
     cow_summary = t._read_snapshot(t.current_version())["summary"]
     print(f"v{t.current_version()} COW merge: rewrote {cow_summary['rewritten_files']} files")
 

@@ -10,6 +10,11 @@ are derived from ``df.schema`` instead of 29 hardcoded columns
 SCD2 model (reference docs/README.md:94-99): every row carries
 ``start_datetime`` (= its extraction timestamp), ``end_datetime`` (= next
 version's start, or the 2250-01-01 sentinel) and ``is_current``.
+
+Every merging operator takes ``mode``, passed to
+:meth:`SnapshotTable.merge`: ``"auto"`` (default) picks merge-on-read
+for deltas small next to the files they touch and copy-on-write for
+restatements; ``"copy-on-write"`` / ``"merge-on-read"`` force one.
 """
 
 from __future__ import annotations
@@ -67,7 +72,7 @@ def scd2_simple(
     updates: DataFrame,
     keys: list[str] | None = None,
     ts_col: str = "extraction_timestamp",
-    mode: str = "copy-on-write",
+    mode: str = "auto",
 ) -> int:
     """M2: single in-order delta batch (reference pyspark_functions.py:40-137).
 
@@ -114,7 +119,7 @@ def scd2_complex(
     updates: DataFrame,
     keys: list[str] | None = None,
     ts_col: str = "extraction_timestamp",
-    mode: str = "copy-on-write",
+    mode: str = "auto",
 ) -> int:
     """M3: multiple and/or late-arriving updates per key
     (reference pyspark_functions.py:142-251).
@@ -180,7 +185,7 @@ def merge_delete_aware(
     keys: list[str],
     deleted_col: str = "record_deleted",
     changed_condition: str | None = None,
-    mode: str = "copy-on-write",
+    mode: str = "auto",
 ) -> int:
     """M5: delete-aware conditional MERGE (reference notebook cell 26):
     MATCHED AND s.deleted → DELETE; MATCHED [AND changed] → UPDATE all

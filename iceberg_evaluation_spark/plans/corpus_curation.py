@@ -1169,6 +1169,7 @@ def q118_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_regionkey": "s.n_regionkey",
             },
         ),
+        mode="copy-on-write",
     )
     t.merge(                                                         # v3 (MOR)
         base.filter(F.col("n_nationkey") % 5 == 2).select(
@@ -1279,6 +1280,7 @@ def q119_rollup_cdf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "price_cents": "s.price_cents",
             },
         ),
+        mode="copy-on-write",
     )
     n1 = roll.refresh_cdf(["o_orderkey"])
 
@@ -1736,6 +1738,7 @@ def q124_sketch_rollup_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             matched_delete_condition="s.__op = 'D'",
             insert_when_not_matched=False,
         ),
+        mode="copy-on-write",
     )
     n1 = roll.refresh_cdf(["event_id"])
 
@@ -1991,6 +1994,7 @@ def q128_cdf_replica_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "s_nationkey": "s.s_nationkey",
             },
         ),
+        mode="copy-on-write",
     )
     # producer wave 2 (plain append): +2M-key copies of %7=3
     base.append(                                                     # v3
@@ -2140,6 +2144,7 @@ def q130_cdc_consumer_cursor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "s_nationkey": "s.s_nationkey",
             },
         ),
+        mode="copy-on-write",
     )
     base.append(                                                     # v3
         sup.filter(F.col("s_suppkey") % 7 == 3).select(
@@ -2274,6 +2279,7 @@ def q136_streaming_cdc_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
             matched_delete_condition="s.__op = 'D'",
             insert_values={"doc_id": "s.doc_id", "text": "s.text"},
         ),
+        mode="copy-on-write",
     )
 
     # consumer leg 1: one tick → one window applied, then the stream
@@ -2582,6 +2588,7 @@ def q143_merge_discovery_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             matched_update={"o_totalprice": "s.o_totalprice"},
             insert_when_not_matched=True,
         ),
+        mode="copy-on-write",
     )
     summ = table._read_snapshot(table.current_version())["summary"]
     cand, rew = int(summ["discovery_candidates"]), int(summ["rewritten_files"])

@@ -8,9 +8,10 @@ table's atomic commit), plus watermarked event-time aggregation over the
 ``events``-shaped stream.
 
 Scale notes: ``foreachBatch`` + scd2_complex keeps the merge incremental
-(only keys present in the micro-batch are re-windowed and only touched
-files rewritten); the windowed aggregation uses a watermark so state is
-bounded by (watermark horizon × key cardinality).
+(only keys present in the micro-batch are re-windowed; small batches
+commit merge-on-read, large ones rewrite only touched files); the
+windowed aggregation uses a watermark so state is bounded by (watermark
+horizon × key cardinality).
 """
 
 from __future__ import annotations
@@ -216,7 +217,7 @@ def scd2_stream(
     ts_col: str = "extraction_timestamp",
     checkpoint_dir: str | None = None,
     trigger_seconds: int | None = None,
-    mode: str = "copy-on-write",
+    mode: str = "auto",
 ) -> StreamingQuery:
     """Apply SCD2-complex maintenance continuously from a streaming source.
 

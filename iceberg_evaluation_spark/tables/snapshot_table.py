@@ -324,7 +324,9 @@ class SnapshotTable:
         entries with ``seq=None`` get this commit's version as their
         sequence. Commits that pass neither publish a delete-free
         snapshot (create/replace, compaction — which materializes
-        deletes through the MOR-aware read).
+        deletes through the MOR-aware read). Delete entries whose
+        sequence is at or below every data file's are dropped: they can
+        kill nothing, so carrying them would only tax every read.
         """
         os.makedirs(self._snap_dir, exist_ok=True)
         current = self.current_version() if self.exists() else 0
@@ -357,10 +359,12 @@ class SnapshotTable:
                 if enc is not None:
                     file_stats[rel] = enc
         seqs = {rel: int((file_seqs or {}).get(rel, version)) for rel in files}
+        oldest = min(seqs.values(), default=version)
         dels = [
             {**d, "seq": version if d.get("seq") is None else int(d["seq"])}
             for d in (delete_files or [])
         ]
+        dels = [d for d in dels if d["seq"] > oldest]
         snap = {
             "version": version,
             "timestamp_ms": int(time.time() * 1000),
@@ -889,42 +893,76 @@ class SnapshotTable:
         ``with_file_col`` attaches each row's source file path under the
         given name (scan-side ``_metadata.file_path`` inside
         ``_read_files`` — neither ``input_file_name()`` nor the metadata
-        column can be resolved above the unions these reads build)."""
+        column can be resolved above the unions these reads build).
+
+        Sequences ride the scan, not the plan: each row's sequence is
+        its file's commit directory mapped through the manifest, so the
+        data side stays ONE scan however many commits it spans, and
+        each delete-key set costs one scan and one broadcast."""
+        from pyspark.sql.types import StructField, StructType
+
         rels = snap["files"] if only_files is None else only_files
         dels = snap.get("delete_files") or []
-        if not dels:
+        if not dels or not rels:
             return self._read_files(rels, snap["schema"], file_col=with_file_col)
         seqs = snap.get("file_seqs") or {}
-        groups: dict[int, list[str]] = {}
-        for rel in rels:
-            groups.setdefault(int(seqs.get(rel, 0)), []).append(rel)
-        data = None
-        for seq in sorted(groups):
-            part = self._read_files(
-                groups[seq], snap["schema"], file_col=with_file_col
-            ).withColumn("__seq", F.lit(seq))
-            data = part if data is None else data.unionByName(part)
-        if data is None:
-            return self._read_files([], snap["schema"], file_col=with_file_col)
+        path_col = with_file_col or "__path"
+        data = self._read_files(rels, snap["schema"], file_col=path_col)
+        data = data.withColumn(
+            "__seq",
+            self._seq_col(path_col, [(rel, int(seqs.get(rel, 0))) for rel in rels]),
+        )
         # one anti join per distinct delete-key set (merges on different
         # keys produce differently-shaped delete files)
+        types = {
+            f.name: f.dataType
+            for f in StructType.fromJson(json.loads(snap["schema"])).fields
+        }
         by_keys: dict[tuple[str, ...], list[dict[str, Any]]] = {}
         for d in dels:
             by_keys.setdefault(tuple(d["keys"]), []).append(d)
         for keys, group in by_keys.items():
-            ddf = None
-            for d in group:
-                p = (
-                    self.spark.read.parquet(os.path.join(self.root, d["file"]))
-                    .select(*[F.col(k).alias(f"__d_{k}") for k in keys])
-                    .withColumn("__dseq", F.lit(int(d["seq"])))
+            # explicit key schema: no footer-inference job per delete file
+            key_schema = StructType([StructField(k, types[k]) for k in keys])
+            ddf = (
+                self.spark.read.schema(key_schema)
+                .parquet(*[os.path.join(self.root, d["file"]) for d in group])
+                .select(
+                    *[F.col(k).alias(f"__d_{k}") for k in keys],
+                    self._seq_col(
+                        "_metadata.file_path",
+                        [(d["file"], int(d["seq"])) for d in group],
+                    ).alias("__dseq"),
                 )
-                ddf = p if ddf is None else ddf.unionByName(p)
+            )
             cond = F.col("__seq") < F.col("__dseq")
             for k in keys:
                 cond = cond & F.col(k).eqNullSafe(F.col(f"__d_{k}"))
             data = data.join(ddf, cond, "left_anti")
-        return data.drop("__seq")
+        data = data.drop("__seq")
+        return data if with_file_col else data.drop(path_col)
+
+    @staticmethod
+    def _seq_col(path_col: str, rel_seqs: list[tuple[str, int]]) -> Column:
+        """Sequence number of each row's file, looked up by the file's
+        commit directory (``data/commit-<id>/…``). Every file of a
+        commit directory was published by one commit, so within a
+        snapshot the directory determines the sequence — and its hex id
+        needs none of the URL escaping ``_metadata.file_path`` applies
+        to partition values."""
+        by_dir: dict[str, int] = {}
+        for rel, seq in rel_seqs:
+            d = rel.split(os.sep)[1].removeprefix("commit-")
+            if by_dir.setdefault(d, seq) != seq:
+                raise ValueError(
+                    f"commit directory {d} carries two sequence numbers "
+                    f"({by_dir[d]} and {seq}) in one snapshot"
+                )
+        dir_id = F.substring_index(
+            F.substring_index(F.col(path_col), "/data/commit-", -1), "/", 1
+        )
+        pairs = [x for d, s in sorted(by_dir.items()) for x in (F.lit(d), F.lit(s))]
+        return F.element_at(F.create_map(*pairs), dir_id)
 
     @staticmethod
     def _is_partitioned_rel(rel: str) -> bool:
@@ -1476,7 +1514,7 @@ class SnapshotTable:
         on: list[str],
         clause: MergeClause,
         validate_source_unique: bool = True,
-        mode: str = "copy-on-write",
+        mode: str = "auto",
         summary_extra: dict[str, Any] | None = None,
     ) -> int:
         """MERGE INTO with file pruning; copy-on-write or merge-on-read.
@@ -1491,23 +1529,28 @@ class SnapshotTable:
         - duplicate source keys raise (Spark/Iceberg merge cardinality
           rule; SURVEY §7 "genuinely hard" #1)
 
-        ``mode='copy-on-write'`` (default, Iceberg ``write.merge.mode``)
+        ``mode='copy-on-write'`` (Iceberg ``write.merge.mode``)
         rewrites every file containing a matched key — read-optimal.
         ``mode='merge-on-read'`` writes only the CHANGED rows plus an
-        equality-delete file (key columns; Iceberg v2 sequence-number
-        semantics: a delete kills rows of strictly lower sequence, so
-        the post-image rows committed alongside it survive). Write
-        amplification drops from rows-per-touched-file to rows-changed —
-        the mode that keeps the reference's failing 3 TB SCD2 case
-        writable — at the cost of an anti join on read until
-        ``compact()`` materializes the deletes. Both modes produce
+        equality-delete set (Iceberg v2 sequence-number semantics: a
+        delete kills rows of strictly lower sequence, so the post-image
+        rows committed alongside it survive). Write amplification drops
+        from rows-per-touched-file to rows-changed — the mode that keeps
+        the reference's failing 3 TB SCD2 case writable — at the cost of
+        an anti join on read until ``compact()`` or a copy-on-write
+        rewrite materializes the deletes. Both modes produce
         byte-identical table contents (pinned in tests).
+
+        ``mode='auto'`` (default) decides per commit: merge-on-read when
+        the source holds at most half as many rows as the candidate
+        files (see :meth:`_choose_merge_mode`), copy-on-write otherwise.
+        The summary records the chosen ``mode`` with ``source_rows`` and
+        ``candidate_rows``, the two inputs of the decision.
         """
-        if mode not in ("copy-on-write", "merge-on-read"):
+        if mode not in ("auto", "copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown merge mode {mode!r}")
         base_version = self.current_version()  # optimistic-concurrency basis
         prev = self._read_snapshot(base_version)
-        target_all = self._read_snapshot_df(prev, with_file_col="__file")
         src = source
 
         # ONE fused source-side aggregation replaces three sequential
@@ -1563,10 +1606,11 @@ class SnapshotTable:
             src = src.localCheckpoint(eager=False)
 
         src_keys = src.select(*on).distinct()
-        # metadata pre-prune: restrict the touched-file DISCOVERY scan to
-        # files whose manifest stats / partition dirs / bucket dirs can
-        # hold a source key at all — on a clustered or bucketed layout
-        # the discovery cost drops from O(table) to O(candidate files).
+        # metadata pre-prune: restrict the touched-file DISCOVERY scan (or
+        # the merge-on-read join) to files whose manifest stats /
+        # partition dirs / bucket dirs can hold a source key at all — on
+        # a clustered or bucketed layout the cost drops from O(table) to
+        # O(candidate files), and the write-mode choice weighs only them.
         # Conservative (superset), and skipped entirely when a source
         # key is NULL (stats ignore nulls; see _key_prune_filters).
         candidate_rel = prev["files"]
@@ -1574,17 +1618,75 @@ class SnapshotTable:
             kf = self._key_prune_filters(src_keys, on, stats=src_stats)
             if kf is not None:
                 candidate_rel = self.pruned_files(kf, version=base_version)
-                if len(candidate_rel) < len(prev["files"]):
-                    target_all = self._read_snapshot_df(
-                        prev, only_files=candidate_rel, with_file_col="__file"
-                    )
+        mode, decision = self._choose_merge_mode(mode, prev, candidate_rel, src_stats)
+        summary = {
+            **decision,
+            "discovery_candidates": len(candidate_rel),
+            **(summary_extra or {}),
+        }
+
+        if mode == "merge-on-read":
+            # MOR rewrites nothing, so there are no victims to discover:
+            # join straight against the candidate files (a superset of
+            # every file holding a source key). They are read MOR-aware —
+            # raw bytes may hold rows an earlier delete already killed,
+            # and matching those would resurrect them.
+            target = self._read_snapshot_df(prev, only_files=candidate_rel)
+            # at most one post-image per source row: size the delta's
+            # files from that bound, not one file per join partition
+            # (every file is a listing entry on each later read)
+            n_out = self._delta_file_count(
+                prev, candidate_rel, decision["source_rows"]
+            )
+
+            def sized(df: DataFrame) -> DataFrame:
+                return df if n_out is None else df.coalesce(n_out)
+
+            if self._post_images_cover_deletes(on, clause):
+                # one file set, one job: the post-images double as the
+                # equality-delete set (their keys are the updated keys
+                # plus insert keys that match no live row; rows of the
+                # delete's own sequence survive it)
+                new_files = self._write_files(
+                    sized(self._merge_post_images(target, src, on, clause))
+                )
+                del_files = new_files
+            else:
+                delete_keys, new_rows = self._apply_merge_mor(
+                    target, src, on, clause
+                )
+                # delete keys are tiny next to the data they replace a
+                # rewrite of; coalesce (no shuffle) so a merge adds a
+                # handful of delete files, not one per join partition
+                del_files = self._write_files(delete_keys.coalesce(4))
+                new_files = self._write_files(sized(new_rows))
+            new_dels = [{"file": rel, "seq": None, "keys": list(on)} for rel in del_files]
+            return self._commit(
+                prev["files"] + new_files,
+                "merge",
+                {
+                    **summary,
+                    "rewritten_files": 0,
+                    "carried_files": len(prev["files"]),
+                    "added_files": len(new_files),
+                    "added_delete_files": len(del_files),
+                },
+                prev["schema"],
+                expected_version=base_version,
+                delete_files=list(prev.get("delete_files") or []) + new_dels,
+                file_seqs=prev.get("file_seqs"),
+                partition_by=prev.get("partition_by"),
+            )
+
         # file-level pruning: only files containing key matches are rewritten.
         # The match condition MUST mirror _apply_merge's eqNullSafe semantics:
         # a plain column-name semi-join is null-rejecting, so a target row
         # with a NULL merge key would never mark its file as touched — the
         # stale row would be carried over while the matching source row was
         # re-inserted as NOT MATCHED, yielding duplicates.
-        t_pr = target_all.alias("t")
+        t_pr = self._read_snapshot_df(
+            prev, only_files=candidate_rel, with_file_col="__file"
+        ).alias("t")
         # the fused stats just proved the source small (the same bound
         # that gated its checkpoint): pin the key set on the semi join's
         # build side so the discovery scan is map-only over the target
@@ -1633,49 +1735,16 @@ class SnapshotTable:
         else:
             target_touched = self.read(version=base_version).limit(0)
 
-        if mode == "merge-on-read":
-            delete_keys, new_rows = self._apply_merge_mor(
-                target_touched, src, on, clause
-            )
-            # delete keys are tiny next to the data they replace a rewrite
-            # of; coalesce (no shuffle) so a merge adds a handful of delete
-            # files, not one per join partition — each delete file is a
-            # separate scan on every subsequent read until compaction
-            del_files = self._write_files(delete_keys.coalesce(4))
-            new_files = self._write_files(new_rows)
-            carried_dels = list(prev.get("delete_files") or [])
-            new_dels = [{"file": rel, "seq": None, "keys": list(on)} for rel in del_files]
-            return self._commit(
-                prev["files"] + new_files,
-                "merge",
-                {
-                    "mode": "merge-on-read",
-                    "rewritten_files": 0,
-                    "carried_files": len(prev["files"]),
-                    "added_files": len(new_files),
-                    "added_delete_files": len(del_files),
-                    "discovery_candidates": len(candidate_rel),
-                    **(summary_extra or {}),
-                },
-                prev["schema"],
-                expected_version=base_version,
-                delete_files=carried_dels + new_dels,
-                file_seqs=prev.get("file_seqs"),
-                partition_by=prev.get("partition_by"),
-            )
-
         merged = self._apply_merge(target_touched, src, on, clause)
-
-        new_files = self._write_files(merged) if merged is not None else []
-        version = self._commit(
+        new_files = self._write_files(merged)
+        return self._commit(
             untouched_rel + new_files,
             "merge",
             {
+                **summary,
                 "rewritten_files": len(touched_rel),
                 "carried_files": len(untouched_rel),
                 "added_files": len(new_files),
-                "discovery_candidates": len(candidate_rel),
-                **(summary_extra or {}),
             },
             prev["schema"],
             expected_version=base_version,
@@ -1689,7 +1758,73 @@ class SnapshotTable:
             # compact() restores the directory layout
             partition_by=prev.get("partition_by"),
         )
-        return version
+
+    @staticmethod
+    def _choose_merge_mode(
+        mode: str,
+        prev: dict[str, Any],
+        candidate_rel: list[str],
+        src_stats: Any | None,
+    ) -> tuple[str, dict[str, Any]]:
+        """Resolve ``mode='auto'`` for one commit; explicit modes pass
+        through. Copy-on-write rewrites the candidate files' rows,
+        merge-on-read writes about the source's rows and taxes reads
+        until compaction — so MOR wins when the source holds at most
+        half the candidate rows. Both inputs are already on hand: the
+        source count from merge()'s fused aggregation, the candidate
+        rows from the manifest's ``#rows``. Without either (stats-free
+        files, or a merge that skipped the aggregation) the choice
+        falls back to copy-on-write rather than pay a Spark job.
+        Returns the mode and the summary entries that record why."""
+        stats = prev.get("file_stats") or {}
+        counts = [(stats.get(rel) or {}).get("#rows") for rel in candidate_rel]
+        cand_rows = None if None in counts else int(sum(counts))
+        src_rows = None if src_stats is None else int(src_stats["__n"])
+        chosen = mode
+        if mode == "auto":
+            small = (
+                src_rows is not None
+                and cand_rows is not None
+                and 2 * src_rows <= cand_rows
+            )
+            chosen = "merge-on-read" if small else "copy-on-write"
+        return chosen, {
+            "mode": chosen,
+            "source_rows": src_rows,
+            "candidate_rows": cand_rows,
+        }
+
+    @staticmethod
+    def _delta_file_count(
+        prev: dict[str, Any], candidate_rel: list[str], src_rows: int | None
+    ) -> int | None:
+        """Files for a merge-on-read delta of at most ``src_rows`` rows:
+        one per 128 MB at the candidate files' bytes per row (compact()'s
+        default target), and at least one. None (keep the join's
+        partitioning) when the source count is unknown."""
+        stats = prev.get("file_stats") or {}
+        rows = sum((stats.get(rel) or {}).get("#rows", 0) for rel in candidate_rel)
+        size = sum((stats.get(rel) or {}).get("#bytes", 0) for rel in candidate_rel)
+        if src_rows is None or rows == 0:
+            return None
+        return max(1, -(-src_rows * size // (rows * (128 << 20))))
+
+    @staticmethod
+    def _post_images_cover_deletes(on: list[str], clause: MergeClause) -> bool:
+        """True iff a MOR commit's post-image rows can serve as its own
+        equality-delete set: no matched row is deleted without a
+        post-image, and every post-image carries its target row's key
+        (updates leave the key columns alone, inserts take the source
+        key). The extra keys are inserts, which match no live row."""
+        if clause.matched_delete_condition:
+            return False
+        upd = clause.matched_update or {}
+        ins = clause.insert_values or {}
+        return all(
+            upd.get(k, f"s.{k}") in (f"s.{k}", f"t.{k}")
+            and ins.get(k, f"s.{k}") == f"s.{k}"
+            for k in on
+        )
 
     def delete_keys(
         self,
@@ -1875,6 +2010,77 @@ class SnapshotTable:
         )
         return n_deleted
 
+    @staticmethod
+    def _merge_join(
+        target: DataFrame,
+        source: DataFrame,
+        on: list[str],
+        clause: MergeClause,
+        how: str = "full_outer",
+    ) -> tuple[DataFrame, Column, Column, Column, dict[str, tuple[Column, Column]]]:
+        """The null-safe key join and clause predicates every merge
+        write shares: ``(joined, delete_cond, update_cond, insert_cond,
+        {column: (update_expr, insert_expr)})`` over target columns.
+
+        Presence markers (not key-null tests) make the clause logic
+        robust to null key values and all-null rows."""
+        t = target.withColumn("__t_present", F.lit(True)).alias("t")
+        s = source.withColumn("__s_present", F.lit(True)).alias("s")
+        cond = None
+        for k in on:
+            c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
+            cond = c if cond is None else (cond & c)
+        joined = t.join(s, cond, how)
+        has_t = F.col("t.__t_present").isNotNull()
+        has_s = F.col("s.__s_present").isNotNull()
+
+        matched = has_t & has_s
+        delete_cond = (
+            matched & F.expr(clause.matched_delete_condition)
+            if clause.matched_delete_condition
+            else F.lit(False)
+        )
+        if clause.matched_update is None:
+            update_cond = F.lit(False)
+        else:
+            update_cond = matched & ~delete_cond
+            if clause.matched_update_condition:
+                update_cond = update_cond & F.expr(clause.matched_update_condition)
+
+        insert_cond = (~has_t) & has_s
+        if clause.insert_condition:
+            insert_cond = insert_cond & F.expr(clause.insert_condition)
+        if not clause.insert_when_not_matched:
+            insert_cond = F.lit(False)
+
+        exprs = {}
+        for c in target.columns:
+            upd = (
+                F.expr(clause.matched_update[c])
+                if clause.matched_update and c in clause.matched_update
+                else F.col(f"t.{c}")
+            )
+            ins = (
+                F.expr(clause.insert_values[c])
+                if clause.insert_values and c in clause.insert_values
+                else (F.col(f"s.{c}") if c in source.columns else F.lit(None))
+            )
+            exprs[c] = (upd, ins)
+        return joined, delete_cond, update_cond, insert_cond, exprs
+
+    def _merge_post_images(
+        self, target: DataFrame, source: DataFrame, on: list[str], clause: MergeClause
+    ) -> DataFrame:
+        """Merge-on-read rows to write: update post-images plus inserts.
+        Source-driven (target rows nothing matches never enter the
+        join), so one lazy frame feeds one write."""
+        joined, _, update_cond, insert_cond, exprs = self._merge_join(
+            target, source, on, clause, how="right_outer"
+        )
+        return joined.filter(update_cond | insert_cond).select(
+            *[F.when(update_cond, u).otherwise(i).alias(c) for c, (u, i) in exprs.items()]
+        )
+
     def _apply_merge_mor(
         self, target: DataFrame, source: DataFrame, on: list[str], clause: MergeClause
     ) -> tuple[DataFrame, DataFrame]:
@@ -1887,51 +2093,9 @@ class SnapshotTable:
         that match nothing are never read into the output — that is the
         write-amplification win.
         """
-        t_cols = target.columns
-        t = target.withColumn("__t_present", F.lit(True)).alias("t")
-        s = source.withColumn("__s_present", F.lit(True)).alias("s")
-        cond = None
-        for k in on:
-            c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-            cond = c if cond is None else (cond & c)
-        joined = t.join(s, cond, "full_outer")
-        has_t = F.col("t.__t_present").isNotNull()
-        has_s = F.col("s.__s_present").isNotNull()
-
-        matched = has_t & has_s
-        delete_cond = (
-            matched & F.expr(clause.matched_delete_condition)
-            if clause.matched_delete_condition
-            else F.lit(False)
+        joined, delete_cond, update_cond, insert_cond, exprs = self._merge_join(
+            target, source, on, clause
         )
-        if clause.matched_update is None:
-            update_cond = F.lit(False)
-        else:
-            update_cond = matched & ~delete_cond
-            if clause.matched_update_condition:
-                update_cond = update_cond & F.expr(clause.matched_update_condition)
-
-        insert_cond = (~has_t) & has_s
-        if clause.insert_condition:
-            insert_cond = insert_cond & F.expr(clause.insert_condition)
-        if not clause.insert_when_not_matched:
-            insert_cond = F.lit(False)
-
-        out_cols = []
-        for c in t_cols:
-            upd = (
-                F.expr(clause.matched_update[c])
-                if clause.matched_update and c in clause.matched_update
-                else F.col(f"t.{c}")
-            )
-            ins_src = (
-                F.expr(clause.insert_values[c])
-                if clause.insert_values and c in clause.insert_values
-                else (F.col(f"s.{c}") if c in source.columns else F.lit(None))
-            )
-            out_cols.append(
-                F.when(update_cond, upd).otherwise(ins_src).alias(c)
-            )
         # ONE evaluation of the join, materialized at changed-rows size:
         # delete keys and post-image rows both project from this frame.
         # Two separate jobs over the uncached join would double the
@@ -1944,74 +2108,37 @@ class SnapshotTable:
                 *[F.col(f"t.{k}").alias(f"__k_{k}") for k in on],
                 (delete_cond | update_cond).alias("__is_del"),
                 (update_cond | insert_cond).alias("__is_new"),
-                *out_cols,
+                *[
+                    F.when(update_cond, u).otherwise(i).alias(c)
+                    for c, (u, i) in exprs.items()
+                ],
             )
             .localCheckpoint()
         )
         delete_keys = delta.filter(F.col("__is_del")).select(
             *[F.col(f"__k_{k}").alias(k) for k in on]
         )
-        new_rows = delta.filter(F.col("__is_new")).select(*t_cols)
+        new_rows = delta.filter(F.col("__is_new")).select(*target.columns)
         return delete_keys, new_rows
 
     def _apply_merge(
         self, target: DataFrame, source: DataFrame, on: list[str], clause: MergeClause
     ) -> DataFrame:
-        """Row-level merge semantics via one full-outer join + projection.
-
-        Presence markers (not key-null tests) make the clause logic robust
-        to null key values and all-null rows.
-        """
-        t_cols = target.columns
-        t = target.withColumn("__t_present", F.lit(True)).alias("t")
-        s = source.withColumn("__s_present", F.lit(True)).alias("s")
-        cond = None
-        for k in on:
-            c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-            cond = c if cond is None else (cond & c)
-        joined = t.join(s, cond, "full_outer")
-        has_t = F.col("t.__t_present").isNotNull()
-        has_s = F.col("s.__s_present").isNotNull()
-
-        matched = has_t & has_s
-        delete_cond = (
-            matched & F.expr(clause.matched_delete_condition)
-            if clause.matched_delete_condition
-            else F.lit(False)
+        """Row-level merge semantics via one full-outer join + projection."""
+        joined, delete_cond, update_cond, insert_cond, exprs = self._merge_join(
+            target, source, on, clause
         )
-        if clause.matched_update is None:
-            update_cond = F.lit(False)
-        else:
-            update_cond = matched & ~delete_cond
-            if clause.matched_update_condition:
-                update_cond = update_cond & F.expr(clause.matched_update_condition)
-
-        insert_cond = (~has_t) & has_s
-        if clause.insert_condition:
-            insert_cond = insert_cond & F.expr(clause.insert_condition)
-        if not clause.insert_when_not_matched:
-            insert_cond = F.lit(False)
-
-        out_cols = []
-        for c in t_cols:
-            upd = (
-                F.expr(clause.matched_update[c])
-                if clause.matched_update and c in clause.matched_update
-                else F.col(f"t.{c}")
-            )
-            ins_src = (
-                F.expr(clause.insert_values[c])
-                if clause.insert_values and c in clause.insert_values
-                else (F.col(f"s.{c}") if c in source.columns else F.lit(None))
-            )
-            out_cols.append(
-                F.when(update_cond, upd)
-                .when(insert_cond, ins_src)
+        has_t = F.col("t.__t_present").isNotNull()
+        keep = ~delete_cond & (has_t | insert_cond)
+        return joined.filter(keep).select(
+            *[
+                F.when(update_cond, u)
+                .when(insert_cond, i)
                 .otherwise(F.col(f"t.{c}"))
                 .alias(c)
-            )
-        keep = ~delete_cond & (has_t | insert_cond)
-        return joined.filter(keep).select(*out_cols)
+                for c, (u, i) in exprs.items()
+            ]
+        )
 
     # ------------------------------------------------------------ maintenance
     def compact(

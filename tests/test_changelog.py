@@ -152,6 +152,7 @@ def test_file_diff_pruning_reads_only_changed_files(spark, tmp_path):
         spark.createDataFrame([(5, -1)], "id long, v long"),
         on=["id"],
         clause=MergeClause(matched_update={"v": "s.v"}),
+        mode="copy-on-write",
     )
     df = table_changes(t, ["id"], 1, 2)
     got = {(r["id"], r["_change_type"]): r["v"] for r in df.collect()}

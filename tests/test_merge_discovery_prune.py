@@ -34,7 +34,7 @@ def test_merge_discovery_prunes_on_clustered_layout(spark, tmp_path):
     delta = spark.createDataFrame(
         [Row(k=i, grp=i % 10, val=-1.0) for i in (3, 5, 7, 401)]
     )
-    t.merge(delta, on=["k"], clause=_upsert_clause())
+    t.merge(delta, on=["k"], clause=_upsert_clause(), mode="copy-on-write")
     summ = t._read_snapshot(t.current_version())["summary"]
     assert summ["discovery_candidates"] < total
     assert summ["rewritten_files"] <= summ["discovery_candidates"]
@@ -73,7 +73,7 @@ def test_null_key_disables_pruning_and_stays_correct(spark, tmp_path):
     delta = spark.createDataFrame(
         [(None, 99, -5.0)], schema="k bigint, grp bigint, val double"
     )
-    t.merge(delta, on=["k"], clause=_upsert_clause())
+    t.merge(delta, on=["k"], clause=_upsert_clause(), mode="copy-on-write")
     summ = t._read_snapshot(t.current_version())["summary"]
     # no pruning: every file was a discovery candidate
     n_files_prev = summ["rewritten_files"] + summ["carried_files"]

@@ -30,7 +30,7 @@ def _pair(spark, tmp_path, df, partitions=4):
 
 
 def _merge_both(cow, mor, src, on, clause):
-    cow.merge(src, on=on, clause=clause)
+    cow.merge(src, on=on, clause=clause, mode="copy-on-write")
     mor.merge(src, on=on, clause=clause, mode="merge-on-read")
 
 
@@ -141,8 +141,10 @@ def test_cow_merge_after_mor_merge_carries_deletes(spark, tmp_path):
     # MOR update on ids 1,3
     _merge_both(cow, mor, spark.createDataFrame([(1, 11), (3, 33)], "id bigint, v bigint"), ["id"], upd)
     # then a COW update touching only id 1
-    cow.merge(spark.createDataFrame([(1, 111)], "id bigint, v bigint"), on=["id"], clause=upd)
-    mor.merge(spark.createDataFrame([(1, 111)], "id bigint, v bigint"), on=["id"], clause=upd)  # default COW
+    cow.merge(spark.createDataFrame([(1, 111)], "id bigint, v bigint"), on=["id"], clause=upd,
+              mode="copy-on-write")
+    mor.merge(spark.createDataFrame([(1, 111)], "id bigint, v bigint"), on=["id"], clause=upd,
+              mode="copy-on-write")
     assert _rows(mor.read()) == _rows(cow.read()) == [(1, 111), (2, 20), (3, 33), (4, 40)]
 
 

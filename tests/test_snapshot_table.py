@@ -43,7 +43,8 @@ def test_merge_file_pruning(spark, tmp_path):
     t.create_or_replace(base.repartition(8, "id"), partitions=8)
 
     src = spark.createDataFrame([(5, -1), (700, -2)], "id long, v long")
-    t.merge(src, on=["id"], clause=MergeClause(matched_update={"v": "s.v"}))
+    t.merge(src, on=["id"], clause=MergeClause(matched_update={"v": "s.v"}),
+            mode="copy-on-write")
 
     snap = t._read_snapshot(t.current_version())
     assert snap["summary"]["carried_files"] > 0  # pruning actually happened
