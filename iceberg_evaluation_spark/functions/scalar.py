@@ -46,10 +46,6 @@ _KEY = "spark.sql.adaptive.enabled"
 
 
 def _scoped(df: DataFrame, action):
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCALAR_AQE_OFF", "1") == "0":
-        return action()  # ablation/debug escape: plain adaptive collect
     spark = df.sparkSession
     try:
         prev = spark.conf.get(_KEY)

@@ -71,6 +71,7 @@ from pyspark.sql import Window as W
 from ..functions.scalar import scalar_collect, scalar_first
 from ..tables._meta import read_json_meta, write_json_meta
 from ..tables.snapshot_table import SnapshotTable
+from .changelog import _window_census_from_manifest
 from .similarity import _as_double, cells_udf, cosine, train_centroids
 
 __all__ = [
@@ -255,48 +256,14 @@ def _geometry_fp(
 def _window_class_from_manifest(source, lo: int, hi: int):
     """(has_dels, has_ins) for the single-version CDF window v_lo→v_hi
     when the source manifest alone proves the class — zero Spark jobs —
-    or None when only a row-level probe can tell.
-
-    Sound cases (each certified by the commit path's own semantics):
-
-    - ``append``: adds rows, removes none — the window's CDF is exactly
-      the added files' rows, so has_ins = (sum of added files' manifest
-      ``#rows``) > 0. Any added file missing stats defers to the probe.
-    - ``delete``: removes exactly ``summary.deleted_rows``, inserts
-      nothing (COW rewrites carry kept rows content-unchanged; MOR adds
-      only a delete file), so the endpoint key-diff has no insert-class
-      rows.
-
-    Everything else (merge — may mix all three classes; schema/spec
-    ops; compaction — content-neutral but its class is the probe's
-    no-op path anyway) returns None.
-    """
-    try:
-        snap = source._read_snapshot(hi)
-    except (OSError, ValueError, KeyError):
-        return None
-    op = snap.get("operation")
-    if op == "append":
-        try:
-            prev_files = set(source._read_snapshot(lo)["files"])
-        except (OSError, ValueError, KeyError):
-            return None
-        stats = snap.get("file_stats") or {}
-        rows = 0
-        for rel in snap.get("files", []):
-            if rel in prev_files:
-                continue
-            n = (stats.get(rel) or {}).get("#rows")
-            if n is None:
-                return None  # stats-less file: let the probe decide
-            rows += int(n)
-        return (False, rows > 0)
-    if op == "delete":
-        n = (snap.get("summary") or {}).get("deleted_rows")
-        if n is None:
-            return None
-        return (int(n) > 0, False)
-    return None
+    or None when only a row-level probe can tell: the class of
+    :func:`changelog._window_census_from_manifest`'s census (an
+    ``append`` inserts its added files' rows, a ``delete`` removes
+    ``summary.deleted_rows`` and inserts nothing — COW rewrites carry
+    kept rows unchanged, MOR adds only a delete file; merges,
+    schema/spec ops and compaction defer to the probe)."""
+    c = _window_census_from_manifest(source, lo, hi)
+    return None if c is None else ("delete" in c, "insert" in c)
 
 
 def _derive_counters(assignments: SnapshotTable) -> tuple[int, int]:

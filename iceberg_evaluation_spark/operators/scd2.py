@@ -11,10 +11,10 @@ SCD2 model (reference docs/README.md:94-99): every row carries
 ``start_datetime`` (= its extraction timestamp), ``end_datetime`` (= next
 version's start, or the 2250-01-01 sentinel) and ``is_current``.
 
-Every merging operator takes ``mode``, passed to
-:meth:`SnapshotTable.merge`: ``"auto"`` (default) picks merge-on-read
-for deltas small next to the files they touch and copy-on-write for
-restatements; ``"copy-on-write"`` / ``"merge-on-read"`` force one.
+Every merging operator writes through :meth:`SnapshotTable.merge`'s
+default ``mode="auto"``, which picks merge-on-read for deltas small
+next to the files they touch and copy-on-write for restatements;
+:func:`scd2_complex` also takes ``mode`` to force one.
 """
 
 from __future__ import annotations
@@ -72,7 +72,6 @@ def scd2_simple(
     updates: DataFrame,
     keys: list[str] | None = None,
     ts_col: str = "extraction_timestamp",
-    mode: str = "auto",
 ) -> int:
     """M2: single in-order delta batch (reference pyspark_functions.py:40-137).
 
@@ -110,7 +109,6 @@ def scd2_simple(
         source,
         on=keys + [ts_col],
         clause=MergeClause(matched_update=update_all),
-        mode=mode,
     )
 
 
@@ -185,7 +183,6 @@ def merge_delete_aware(
     keys: list[str],
     deleted_col: str = "record_deleted",
     changed_condition: str | None = None,
-    mode: str = "auto",
 ) -> int:
     """M5: delete-aware conditional MERGE (reference notebook cell 26):
     MATCHED AND s.deleted → DELETE; MATCHED [AND changed] → UPDATE all
@@ -202,7 +199,6 @@ def merge_delete_aware(
             insert_when_not_matched=True,
             insert_condition=f"NOT s.{deleted_col}",
         ),
-        mode=mode,
     )
 
 

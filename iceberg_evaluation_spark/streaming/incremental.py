@@ -217,7 +217,6 @@ def scd2_stream(
     ts_col: str = "extraction_timestamp",
     checkpoint_dir: str | None = None,
     trigger_seconds: int | None = None,
-    mode: str = "auto",
 ) -> StreamingQuery:
     """Apply SCD2-complex maintenance continuously from a streaming source.
 
@@ -231,7 +230,7 @@ def scd2_stream(
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        scd2_complex(table, batch_df, keys=keys, ts_col=ts_col, mode=mode)
+        scd2_complex(table, batch_df, keys=keys, ts_col=ts_col)
 
     writer = source.writeStream.foreachBatch(apply_batch).outputMode("update")
     if checkpoint_dir:

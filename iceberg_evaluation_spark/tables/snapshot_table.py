@@ -20,12 +20,17 @@ Layout::
 Scale design:
 - Reads are plain ``spark.read.parquet(files)`` → vectorized scan,
   predicate pushdown, column pruning all intact.
-- MERGE is **copy-on-write with file-level pruning**: a semi-join of the
-  target against the source keys (tagged with ``input_file_name``)
-  computes the touched-file set; untouched files carry over into the new
-  snapshot by reference, only touched files are rewritten. At 100 TB with
-  0.1 % daily updates this rewrites ~the files containing matches, not
-  the table (same win Iceberg's merge gets from manifest pruning).
+- MERGE and row-level DELETE share one match pipeline: one fused
+  aggregation of the source keys (``_key_stats``) → the candidate files
+  whose manifest stats / partition dirs can hold a key
+  (``_candidate_files``) → the write mode → either a merge-on-read delta
+  (changed rows plus an equality-delete set) or copy-on-write: a
+  null-safe semi join of the candidates against the keys, tagged with
+  each row's ``_metadata.file_path``, finds the touched files
+  (``_touched_files``); untouched files carry over by reference and
+  only touched files are rewritten. At 100 TB with 0.1 % daily updates
+  this rewrites ~the files containing matches, not the table (same win
+  Iceberg's merge gets from manifest pruning).
 - The VERSION pointer flips via ``os.replace`` (atomic on POSIX), so
   readers never see a torn snapshot; writers use optimistic concurrency
   (Iceberg's commit model): state-reading operations (merge, compact)
@@ -1457,9 +1462,31 @@ class SnapshotTable:
         )
 
     # ------------------------------------------------------------------ merge
+    @staticmethod
+    def _key_stats(src: DataFrame, on: list[str]) -> Any:
+        """ONE fused aggregation over a merge source or delete key set:
+        row count ``__n``, distinct-key count ``__nd`` (the merge
+        cardinality check), and the leading key's null count, distinct
+        count and min/max that :meth:`_key_prune_filters` plans from.
+        At bench scale each Spark action costs ~0.3-0.4 s of scheduling
+        and planning regardless of data size, so one job here replaces
+        a dup-key probe, a null-key probe and a distinct key count.
+        count_distinct(struct(keys)) counts null-keyed groups exactly
+        like a groupBy probe would (a struct is never null)."""
+        k0 = on[0]
+        return scalar_first(
+            src.agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.count_distinct(F.struct(*[F.col(k) for k in on])).alias("__nd"),
+                F.sum(F.when(F.col(k0).isNull(), 1).otherwise(0)).alias("__k0_nulls"),
+                F.count_distinct(F.col(k0)).alias("__nd_k0"),
+                F.min(k0).alias("__mn"),
+                F.max(k0).alias("__mx"),
+            )
+        )
+
     def _key_prune_filters(
-        self, src_keys: DataFrame, on: list[str],
-        stats: Any | None = None,
+        self, src_keys: DataFrame, on: list[str], stats: Any
     ) -> list[tuple[str, str, Any]] | None:
         """Metadata prune filters derived from a MERGE/DELETE source's
         key values — the scan-planning step that makes row-level ops
@@ -1475,38 +1502,89 @@ class SnapshotTable:
         file holding NULL-key rows could be wrongly pruned while
         eqNullSafe matching would have touched it.
 
-        ``stats`` (optional) is a precomputed Row carrying ``__k0_nulls``,
-        ``__nd_k0``, ``__mn``, ``__mx`` over the SAME key frame —
-        merge() computes it in its fused source aggregation so the
-        null/cardinality/min-max probes here cost no extra Spark jobs;
-        only the ≤1000-value ``in``-list still reads the keys."""
+        ``stats`` is the :meth:`_key_stats` Row over the SAME key frame,
+        so the null/cardinality/min-max probes here cost no extra Spark
+        jobs; only the ≤1000-value ``in``-list still reads the keys."""
         k0 = on[0]
-        if stats is not None:
-            if stats["__n"] == 0:
-                return None
-            if (stats["__k0_nulls"] or 0) > 0:
-                return None
-            if stats["__nd_k0"] > 1000:
-                return [(k0, "between", (stats["__mn"], stats["__mx"]))]
-            vals = [
-                r[0]
-                for r in scalar_collect(src_keys.select(k0).distinct())
-            ]
-            return [(k0, "in", vals)]
-        if src_keys.filter(F.col(k0).isNull()).limit(1).collect():
+        if stats["__n"] == 0 or (stats["__k0_nulls"] or 0) > 0:
             return None
-        vals = [
-            r[0]
-            for r in src_keys.select(k0).distinct().limit(1001).collect()
-        ]
-        if not vals:
-            return None
-        if len(vals) <= 1000:
-            return [(k0, "in", vals)]
-        mm = scalar_first(
-            src_keys.agg(F.min(k0).alias("mn"), F.max(k0).alias("mx"))
+        if stats["__nd_k0"] > 1000:
+            return [(k0, "between", (stats["__mn"], stats["__mx"]))]
+        vals = [r[0] for r in scalar_collect(src_keys.select(k0).distinct())]
+        return [(k0, "in", vals)]
+
+    def _candidate_files(
+        self, snap: dict[str, Any], version: int, keys: DataFrame,
+        on: list[str], stats: Any | None,
+    ) -> list[str]:
+        """The files of ``snap`` that can hold a key of ``keys``: a
+        conservative superset, restricted by manifest stats / partition
+        dirs / bucket dirs (see :meth:`_key_prune_filters`). Tables under
+        8 files, and key frames without stats, are not pruned."""
+        if stats is None or len(snap["files"]) < 8:
+            return snap["files"]
+        kf = self._key_prune_filters(keys, on, stats)
+        return snap["files"] if kf is None else self.pruned_files(kf, version=version)
+
+    @staticmethod
+    def _match(left: str, right: str, on: list[str]) -> Column:
+        """Null-safe key equality between the aliases ``left`` and
+        ``right``, the one match every row-level op uses. A plain
+        column-name join is null-rejecting: a target row with a NULL
+        merge key would never mark its file as touched — the stale row
+        would be carried over while the matching source row was
+        re-inserted as NOT MATCHED, yielding duplicates."""
+        cond = None
+        for k in on:
+            c = F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}"))
+            cond = c if cond is None else (cond & c)
+        return cond
+
+    def _match_scan(
+        self, snap: dict[str, Any], files: list[str], keys: DataFrame,
+        on: list[str], small: bool,
+    ) -> DataFrame:
+        """``(on…, __file)`` of every live row of ``files`` whose key is
+        in ``keys``. The read is MOR-aware — raw bytes may hold rows an
+        earlier delete already killed, and matching those would
+        resurrect them. A ``small`` key set is pinned on the semi join's
+        build side: the scan stays map-only, and scalar collects over it
+        need no AQE join rescue."""
+        t = self._read_snapshot_df(snap, only_files=files, with_file_col="__file")
+        k = (F.broadcast(keys) if small else keys).alias("k")
+        return (
+            t.select(*on, "__file")
+            .alias("t")
+            .join(k, self._match("t", "k", on), "left_semi")
         )
-        return [(k0, "between", (mm["mn"], mm["mx"]))]
+
+    def _touched_files(self, matched: DataFrame, small: bool) -> set[str]:
+        """Manifest paths of the files ``matched`` (a :meth:`_match_scan`)
+        hits: the copy-on-write victims. One collect, bounded by the
+        table's file count."""
+        files = matched.select("__file").distinct()
+        rows = scalar_collect(files) if small else files.collect()
+        return {self._rel_of(r["__file"]) for r in rows}
+
+    @staticmethod
+    def _rel_of(uri: str) -> str:
+        """The manifest path of a ``_metadata.file_path`` URI.
+
+        URIs look like file:///<root>/data/commit-x/part-*.parquet —
+        recover the root-relative path for an exact O(1) membership
+        test (an endswith scan would be O(files × touched) and can
+        false-positive on basename collisions across commits).
+        _metadata.file_path is URL-ENCODED ('k=a b' on disk surfaces as
+        'k=a%20b', a literal '%' is double-encoded) while manifests hold
+        literal on-disk relpaths — unquote ONCE to map between them, or
+        partitioned files with special-char values are never seen as
+        touched and a merge duplicates their rows."""
+        from urllib.parse import unquote
+
+        marker = "/data/"
+        idx = uri.rfind(marker)
+        rel = "data/" + uri[idx + len(marker):] if idx >= 0 else uri
+        return unquote(rel)
 
     def merge(
         self,
@@ -1553,32 +1631,11 @@ class SnapshotTable:
         prev = self._read_snapshot(base_version)
         src = source
 
-        # ONE fused source-side aggregation replaces three sequential
-        # driver-blocking jobs (dup-key probe, null-key probe, distinct
-        # key-count): at bench scale each Spark action costs ~0.3-0.4 s
-        # of scheduling/planning regardless of data size, and a merge
-        # pipeline pays that per commit. count_distinct(struct(keys))
-        # counts null-keyed groups exactly like the old groupBy probe
-        # (struct is never null), so the duplicate test n > nd is
-        # equivalent; the example row for the error message is fetched
-        # only on the failure path.
-        need_prune = len(prev["files"]) >= 8
-        k0 = on[0]
-        src_stats = None
-        if validate_source_unique or need_prune:
-            aggs = [
-                F.count(F.lit(1)).alias("__n"),
-                F.count_distinct(
-                    F.struct(*[F.col(k) for k in on])
-                ).alias("__nd"),
-                F.sum(
-                    F.when(F.col(k0).isNull(), 1).otherwise(0)
-                ).alias("__k0_nulls"),
-                F.count_distinct(F.col(k0)).alias("__nd_k0"),
-                F.min(k0).alias("__mn"),
-                F.max(k0).alias("__mx"),
-            ]
-            src_stats = scalar_first(src.agg(*aggs))
+        # one fused source aggregation serves the duplicate-key check,
+        # candidate pruning and the mode choice; the example row for the
+        # error message is fetched only on the failure path
+        need_stats = validate_source_unique or len(prev["files"]) >= 8
+        src_stats = self._key_stats(src, on) if need_stats else None
 
         if validate_source_unique and src_stats["__n"] > src_stats["__nd"]:
             # failure path only: recover one offending key for the message
@@ -1602,22 +1659,17 @@ class SnapshotTable:
         # sources keep the re-scan (bounded executor storage beats a
         # multi-GB materialization at 100 TB). Results are unchanged —
         # the passes always required a deterministic source.
-        if src_stats is not None and int(src_stats["__n"]) <= 1_000_000:
+        small_src = src_stats is not None and int(src_stats["__n"]) <= 1_000_000
+        if small_src:
             src = src.localCheckpoint(eager=False)
 
         src_keys = src.select(*on).distinct()
         # metadata pre-prune: restrict the touched-file DISCOVERY scan (or
-        # the merge-on-read join) to files whose manifest stats /
-        # partition dirs / bucket dirs can hold a source key at all — on
-        # a clustered or bucketed layout the cost drops from O(table) to
-        # O(candidate files), and the write-mode choice weighs only them.
-        # Conservative (superset), and skipped entirely when a source
-        # key is NULL (stats ignore nulls; see _key_prune_filters).
-        candidate_rel = prev["files"]
-        if need_prune:
-            kf = self._key_prune_filters(src_keys, on, stats=src_stats)
-            if kf is not None:
-                candidate_rel = self.pruned_files(kf, version=base_version)
+        # the merge-on-read join) to files that can hold a source key at
+        # all — on a clustered or bucketed layout the cost drops from
+        # O(table) to O(candidate files), and the write-mode choice
+        # weighs only them
+        candidate_rel = self._candidate_files(prev, base_version, src_keys, on, src_stats)
         mode, decision = self._choose_merge_mode(mode, prev, candidate_rel, src_stats)
         summary = {
             **decision,
@@ -1661,97 +1713,52 @@ class SnapshotTable:
                 del_files = self._write_files(delete_keys.coalesce(4))
                 new_files = self._write_files(sized(new_rows))
             new_dels = [{"file": rel, "seq": None, "keys": list(on)} for rel in del_files]
-            return self._commit(
-                prev["files"] + new_files,
-                "merge",
-                {
-                    **summary,
-                    "rewritten_files": 0,
-                    "carried_files": len(prev["files"]),
-                    "added_files": len(new_files),
-                    "added_delete_files": len(del_files),
-                },
-                prev["schema"],
-                expected_version=base_version,
-                delete_files=list(prev.get("delete_files") or []) + new_dels,
-                file_seqs=prev.get("file_seqs"),
-                partition_by=prev.get("partition_by"),
+            files = prev["files"] + new_files
+            delete_files = list(prev.get("delete_files") or []) + new_dels
+            summary.update(
+                rewritten_files=0,
+                carried_files=len(prev["files"]),
+                added_files=len(new_files),
+                added_delete_files=len(del_files),
             )
-
-        # file-level pruning: only files containing key matches are rewritten.
-        # The match condition MUST mirror _apply_merge's eqNullSafe semantics:
-        # a plain column-name semi-join is null-rejecting, so a target row
-        # with a NULL merge key would never mark its file as touched — the
-        # stale row would be carried over while the matching source row was
-        # re-inserted as NOT MATCHED, yielding duplicates.
-        t_pr = self._read_snapshot_df(
-            prev, only_files=candidate_rel, with_file_col="__file"
-        ).alias("t")
-        # the fused stats just proved the source small (the same bound
-        # that gated its checkpoint): pin the key set on the semi join's
-        # build side so the discovery scan is map-only over the target
-        # and its collect (bounded by the table's file count) needs no
-        # AQE join rescue — one job instead of the per-exchange swarm
-        small_src = src_stats is not None and int(src_stats["__n"]) <= 1_000_000
-        k_pr = (F.broadcast(src_keys) if small_src else src_keys).alias("k")
-        prune_cond = None
-        for k in on:
-            c = F.col(f"t.{k}").eqNullSafe(F.col(f"k.{k}"))
-            prune_cond = c if prune_cond is None else (prune_cond & c)
-        discovery = (
-            t_pr.join(k_pr, prune_cond, "left_semi")
-            .select("__file")
-            .distinct()
-        )
-        touched_rows = (
-            scalar_collect(discovery) if small_src else discovery.collect()
-        )
-        # URIs look like file:///<root>/data/commit-x/part-*.parquet —
-        # recover the root-relative path for an exact O(1) membership
-        # test (an endswith scan would be O(files × touched) and can
-        # false-positive on basename collisions across commits).
-        # _metadata.file_path is URL-ENCODED ('k=a b' on disk surfaces as
-        # 'k=a%20b', a literal '%' is double-encoded) while prev["files"]
-        # holds literal on-disk relpaths — unquote ONCE to map between
-        # them, or partitioned files with special-char values are never
-        # seen as touched and the merge duplicates their rows
-        from urllib.parse import unquote
-
-        def _to_rel(uri: str) -> str:
-            marker = "/data/"
-            idx = uri.rfind(marker)
-            rel = "data/" + uri[idx + len(marker):] if idx >= 0 else uri
-            return unquote(rel)
-
-        touched_set = {_to_rel(r["__file"]) for r in touched_rows}
-        untouched_rel = [rel for rel in prev["files"] if rel not in touched_set]
-        touched_rel = [rel for rel in prev["files"] if rel in touched_set]
-
-        # touched files are read MOR-aware: raw bytes may contain rows an
-        # earlier merge-on-read delete already killed — matching (or
-        # rewriting) those would resurrect them
-        if touched_rel:
-            target_touched = self._read_snapshot_df(prev, only_files=touched_rel)
         else:
-            target_touched = self.read(version=base_version).limit(0)
+            # file-level pruning: only files containing key matches are
+            # rewritten (matched null-safely, like _apply_merge)
+            touched_set = self._touched_files(
+                self._match_scan(prev, candidate_rel, src_keys, on, small_src),
+                small_src,
+            )
+            untouched_rel = [rel for rel in prev["files"] if rel not in touched_set]
+            touched_rel = [rel for rel in prev["files"] if rel in touched_set]
 
-        merged = self._apply_merge(target_touched, src, on, clause)
-        new_files = self._write_files(merged)
-        return self._commit(
-            untouched_rel + new_files,
-            "merge",
-            {
-                **summary,
-                "rewritten_files": len(touched_rel),
-                "carried_files": len(untouched_rel),
-                "added_files": len(new_files),
-            },
-            prev["schema"],
-            expected_version=base_version,
+            # touched files are read MOR-aware: raw bytes may contain rows an
+            # earlier merge-on-read delete already killed — matching (or
+            # rewriting) those would resurrect them
+            if touched_rel:
+                target_touched = self._read_snapshot_df(prev, only_files=touched_rel)
+            else:
+                target_touched = self.read(version=base_version).limit(0)
+
+            new_files = self._write_files(
+                self._apply_merge(target_touched, src, on, clause)
+            )
+            files = untouched_rel + new_files
             # carried UNTOUCHED files may still have live equality-deletes
             # against them; rewritten files take this commit's sequence,
             # putting them out of every existing delete's reach
-            delete_files=prev.get("delete_files"),
+            delete_files = prev.get("delete_files")
+            summary.update(
+                rewritten_files=len(touched_rel),
+                carried_files=len(untouched_rel),
+                added_files=len(new_files),
+            )
+        return self._commit(
+            files,
+            "merge",
+            summary,
+            prev["schema"],
+            expected_version=base_version,
+            delete_files=delete_files,
             file_seqs=prev.get("file_seqs"),
             # merge deltas write unpartitioned (the partition columns ride
             # IN the files — same read schema, footer-stats prunable);
@@ -1853,9 +1860,13 @@ class SnapshotTable:
         is O(|matched keys|) however the victims scatter across a
         100 TB table, at the price of an anti join on every read until
         ``compact()`` materializes the deletes. Both modes produce
-        byte-identical table contents (the merge() contract). The MOR
-        path still runs the match scan first so a no-match takedown
-        commits nothing and the returned count stays exact.
+        byte-identical table contents (the merge() contract).
+
+        Both modes start from ONE match scan of the candidate files,
+        column-pruned to ``(keys, file)`` and checkpointed: its count is
+        the exact number of rows deleted (0 commits nothing), its
+        distinct keys are the merge-on-read delete set, and its distinct
+        files are the copy-on-write victims.
 
         Returns the number of rows deleted (0 = no commit, so a no-op
         takedown never grows the snapshot log)."""
@@ -1864,147 +1875,69 @@ class SnapshotTable:
         base_version = self.current_version()
         snap = self._read_snapshot(base_version)
         src = keys_df.select(*on).distinct().localCheckpoint(eager=False)
-        key_stats = None
+        # caller-supplied filters win; otherwise derive them from the key
+        # set, same conservative planning as merge() — a takedown batch
+        # scans candidate files, not the table
+        stats_free = prune_filters or len(snap["files"]) < 8
+        key_stats = None if stats_free else self._key_stats(src, on)
         if prune_filters:
             candidates = self.pruned_files(prune_filters, version=base_version)
-        elif len(snap["files"]) >= 8:
-            # no caller-supplied filters: auto-derive them from the key
-            # set (manifest stats / partition dirs / bucket transforms),
-            # same conservative planning as merge() — a takedown batch
-            # scans candidate files, not the table. One fused agg
-            # replaces the null-probe + distinct-limit jobs (merge()'s
-            # fused-stats move, applied to the delete path).
-            k0 = on[0]
-            key_stats = scalar_first(
-                src.agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    F.lit(0).alias("__nd"),
-                    F.sum(
-                        F.when(F.col(k0).isNull(), 1).otherwise(0)
-                    ).alias("__k0_nulls"),
-                    F.count_distinct(F.col(k0)).alias("__nd_k0"),
-                    F.min(k0).alias("__mn"),
-                    F.max(k0).alias("__mx"),
-                )
-            )
-            kf = self._key_prune_filters(src, on, stats=key_stats)
-            candidates = (
-                self.pruned_files(kf, version=base_version)
-                if kf is not None
-                else snap["files"]
-            )
         else:
-            candidates = snap["files"]
-        # null-safe match, mirroring merge()'s key semantics. When the
-        # fused key stats proved the key set bounded, pin it on the
-        # match join's build side (merge()'s discovery move): the match
-        # scan stays map-only and the scalar collects below need no
-        # AQE join rescue.
+            candidates = self._candidate_files(snap, base_version, src, on, key_stats)
+        # merge()'s bound: a small key set is pinned on the join build side
         small_keys = key_stats is not None and int(key_stats["__n"]) <= 1_000_000
-        k_pr = (F.broadcast(src) if small_keys else src).alias("k")
-        cond = None
-        for k in on:
-            c = F.col(f"t.{k}").eqNullSafe(F.col(f"k.{k}"))
-            cond = c if cond is None else (cond & c)
+        hit = self._match_scan(snap, candidates, src, on, small_keys)
+        hit = hit.localCheckpoint(eager=False)
+        n_deleted = int(scalar_count(hit))
+        if n_deleted == 0:
+            return 0  # no match: commit nothing
+        summary = {"deleted_rows": n_deleted, "mode": mode}
         if mode == "merge-on-read":
-            # single-pass purge: MOR rewrites nothing, and both the
-            # exact count and the equality-delete file need ONLY the
-            # key columns of matching rows — so the touched-file
-            # discovery pass (a second driver-blocking collect whose
-            # answer the COW path uses to pick rewrite victims) is
-            # pure overhead here, and the old full-width victim-row
-            # checkpoint is key-width now. One key-pruned scan of the
-            # candidate files yields count + delete file together.
-            hit = (
-                self._read_snapshot_df(snap, only_files=candidates)
-                .select(*on)
-                .alias("t")
-                .join(k_pr, cond, "left_semi")
-                .localCheckpoint(eager=False)
-            )
-            n_deleted = int(scalar_count(hit))
-            if n_deleted == 0:
-                return 0  # no match: commit nothing (same as COW)
             # write only the keys that actually match: the read-side
             # anti join stays |victims|-sized, and absent keys add no
             # state
-            del_files = self._write_files(hit.distinct().coalesce(4))
-            carried = list(snap.get("delete_files") or [])
-            new_dels = [
-                {"file": rel, "seq": None, "keys": list(on)}
-                for rel in del_files
+            del_files = self._write_files(hit.select(*on).distinct().coalesce(4))
+            files = snap["files"]
+            delete_files = list(snap.get("delete_files") or []) + [
+                {"file": rel, "seq": None, "keys": list(on)} for rel in del_files
             ]
-            self._commit(
-                snap["files"],
-                "delete",
-                {
-                    "deleted_rows": n_deleted,
-                    "mode": "merge-on-read",
-                    "rewritten_files": 0,
-                    "carried_files": len(snap["files"]),
-                    "added_delete_files": len(del_files),
-                    **(summary_extra or {}),
-                },
-                snap["schema"],
-                expected_version=base_version,
-                delete_files=carried + new_dels,
-                file_seqs=snap.get("file_seqs"),
-                partition_by=snap.get("partition_by"),
+            summary.update(
+                rewritten_files=0,
+                carried_files=len(files),
+                added_delete_files=len(del_files),
             )
-            return n_deleted
-        # copy-on-write: discover the touched files (the rewrite victims),
-        # then rewrite only those
-        scan = self._read_snapshot_df(
-            snap, only_files=candidates, with_file_col="__file"
-        )
-        cow_discovery = (
-            scan.alias("t")
-            .join(k_pr, cond, "left_semi")
-            .select("__file")
-            .distinct()
-        )
-        touched_rows = (
-            scalar_collect(cow_discovery)
-            if small_keys
-            else cow_discovery.collect()
-        )
-        if not touched_rows:
-            return 0
-        from urllib.parse import unquote
-
-        def _to_rel(uri: str) -> str:
-            marker = "/data/"
-            idx = uri.rfind(marker)
-            rel = "data/" + uri[idx + len(marker):] if idx >= 0 else uri
-            return unquote(rel)
-
-        touched_set = {_to_rel(r["__file"]) for r in touched_rows}
-        touched_rel = [rel for rel in snap["files"] if rel in touched_set]
-        moved = self._read_snapshot_df(snap, only_files=touched_rel)
-        kept_rows = moved.alias("t").join(k_pr, cond, "left_anti").localCheckpoint(
-            eager=False
-        )
-        n_deleted = int(scalar_count(moved)) - int(scalar_count(kept_rows))
-        new_files = self._write_files(
-            kept_rows, partition_by=snap.get("partition_by")
-        )
-        keep = [rel for rel in snap["files"] if rel not in touched_set]
-        self._commit(
-            keep + new_files,
-            "delete",
-            {
-                "deleted_rows": n_deleted,
-                "rewritten_files": len(touched_rel),
-                "carried_files": len(keep),
-                "added_files": len(new_files),
-                **(summary_extra or {}),
-            },
-            snap["schema"],
-            expected_version=base_version,
+        else:
+            # copy-on-write: rewrite only the files the match scan hit (a
+            # checkpoint read, so its collect needs no join rescue)
+            touched_set = self._touched_files(hit, small=True)
+            touched_rel = [rel for rel in snap["files"] if rel in touched_set]
+            k_pr = (F.broadcast(src) if small_keys else src).alias("k")
+            kept_rows = (
+                self._read_snapshot_df(snap, only_files=touched_rel)
+                .alias("t")
+                .join(k_pr, self._match("t", "k", on), "left_anti")
+            )
+            new_files = self._write_files(
+                kept_rows, partition_by=snap.get("partition_by")
+            )
+            keep = [rel for rel in snap["files"] if rel not in touched_set]
+            files = keep + new_files
             # carried files may still have live equality-deletes against
             # them; rewritten files take this commit's sequence (same
             # model as copy-on-write merge)
-            delete_files=snap.get("delete_files"),
+            delete_files = snap.get("delete_files")
+            summary.update(
+                rewritten_files=len(touched_rel),
+                carried_files=len(keep),
+                added_files=len(new_files),
+            )
+        self._commit(
+            files,
+            "delete",
+            {**summary, **(summary_extra or {})},
+            snap["schema"],
+            expected_version=base_version,
+            delete_files=delete_files,
             file_seqs=snap.get("file_seqs"),
             partition_by=snap.get("partition_by"),
         )
@@ -2026,11 +1959,7 @@ class SnapshotTable:
         robust to null key values and all-null rows."""
         t = target.withColumn("__t_present", F.lit(True)).alias("t")
         s = source.withColumn("__s_present", F.lit(True)).alias("s")
-        cond = None
-        for k in on:
-            c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-            cond = c if cond is None else (cond & c)
-        joined = t.join(s, cond, how)
+        joined = t.join(s, SnapshotTable._match("t", "s", on), how)
         has_t = F.col("t.__t_present").isNotNull()
         has_s = F.col("s.__s_present").isNotNull()
 

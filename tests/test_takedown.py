@@ -23,6 +23,8 @@ from iceberg_evaluation_spark.tables.snapshot_table import (
     SnapshotTable,
 )
 
+from .test_merge_auto_mode import _jobs
+
 CORPUS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
     (2, "pack my box with five dozen liquor jugs for the annual county fair"),
@@ -332,6 +334,27 @@ def test_delete_keys_merge_on_read_matches_cow(spark, tmp_path):
     assert rows(mor) == before
     with __import__("pytest").raises(ValueError, match="unknown delete mode"):
         mor.delete_keys(victims, on=["id"], mode="bogus")
+
+
+def test_cow_delete_shares_the_match_scan(spark, tmp_path):
+    """One match scan serves both delete modes: its distinct files are
+    the copy-on-write victims, so a COW takedown of 1% scattered keys
+    runs at most one Spark job more than its MOR twin (the rewrite) and
+    records its mode like MOR deletes and merges do."""
+    df = spark.range(20000).select(F.col("id"), (F.col("id") * 7 % 13).alias("v"))
+    victims = spark.range(20000).filter(F.col("id") % 100 == 1).select("id")
+    jobs, summaries = {}, {}
+    for mode in ("copy-on-write", "merge-on-read"):
+        t = SnapshotTable(spark, str(tmp_path / mode))
+        t.create_or_replace(df.repartition(16), 16)
+        assert len(t._read_snapshot(t.current_version())["files"]) == 16
+        jobs[mode] = _jobs(spark, lambda: t.delete_keys(victims, on=["id"], mode=mode))
+        summaries[mode] = t._read_snapshot(t.current_version())["summary"]
+        assert t.read().count() == 19800
+    assert summaries["copy-on-write"]["mode"] == "copy-on-write"
+    assert summaries["copy-on-write"]["deleted_rows"] == 200
+    assert summaries["copy-on-write"]["rewritten_files"] == 16
+    assert jobs["copy-on-write"] <= jobs["merge-on-read"] + 1, jobs
 
 
 def test_apply_deletes_merge_on_read_declassifies_and_compacts(spark, tmp_path):
