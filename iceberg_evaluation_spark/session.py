@@ -16,9 +16,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = ["get_spark", "default_driver_memory", "DEFAULT_SHUFFLE_PARTITIONS"]
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    48g, or half of physical memory where that is less, so the heap of
+    one long-lived driver JVM stays within what the machine holds."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf (Windows)
+        return "48g"
+    return f"{min(48 << 10, phys // (2 << 20))}m"
 
 
 def get_spark(
@@ -50,7 +61,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         # Scan-split and AQE-coalesce target sizes (guide §2.2/§6/§9).
         # Local defaults match Spark's own (128 MB splits, 64 MB advisory)

@@ -1624,6 +1624,11 @@ class SnapshotTable:
         files (see :meth:`_choose_merge_mode`), copy-on-write otherwise.
         The summary records the chosen ``mode`` with ``source_rows`` and
         ``candidate_rows``, the two inputs of the decision.
+
+        Either mode writes target-sized files (one per 128 MB at the
+        weighed files' bytes per row, see :meth:`_target_file_count`),
+        not one per join partition, so a copy-on-write restatement
+        leaves ``compact()`` nothing to pack.
         """
         if mode not in ("auto", "copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1687,20 +1692,16 @@ class SnapshotTable:
             # at most one post-image per source row: size the delta's
             # files from that bound, not one file per join partition
             # (every file is a listing entry on each later read)
-            n_out = self._delta_file_count(
+            n_out = self._target_file_count(
                 prev, candidate_rel, decision["source_rows"]
             )
-
-            def sized(df: DataFrame) -> DataFrame:
-                return df if n_out is None else df.coalesce(n_out)
-
             if self._post_images_cover_deletes(on, clause):
                 # one file set, one job: the post-images double as the
                 # equality-delete set (their keys are the updated keys
                 # plus insert keys that match no live row; rows of the
                 # delete's own sequence survive it)
                 new_files = self._write_files(
-                    sized(self._merge_post_images(target, src, on, clause))
+                    self._sized(self._merge_post_images(target, src, on, clause), n_out)
                 )
                 del_files = new_files
             else:
@@ -1711,7 +1712,7 @@ class SnapshotTable:
                 # rewrite of; coalesce (no shuffle) so a merge adds a
                 # handful of delete files, not one per join partition
                 del_files = self._write_files(delete_keys.coalesce(4))
-                new_files = self._write_files(sized(new_rows))
+                new_files = self._write_files(self._sized(new_rows, n_out))
             new_dels = [{"file": rel, "seq": None, "keys": list(on)} for rel in del_files]
             files = prev["files"] + new_files
             delete_files = list(prev.get("delete_files") or []) + new_dels
@@ -1739,8 +1740,18 @@ class SnapshotTable:
             else:
                 target_touched = self.read(version=base_version).limit(0)
 
+            # at most every touched row plus one per source row: size the
+            # rewrite like a merge-on-read delta, not one file per join
+            # partition, so compact() finds nothing left to pack
+            src_rows = decision["source_rows"]
+            t_rows = self._manifest_rows(prev, touched_rel)
+            n_out = self._target_file_count(
+                prev,
+                touched_rel,
+                None if src_rows is None or t_rows is None else t_rows + src_rows,
+            )
             new_files = self._write_files(
-                self._apply_merge(target_touched, src, on, clause)
+                self._sized(self._apply_merge(target_touched, src, on, clause), n_out)
             )
             files = untouched_rel + new_files
             # carried UNTOUCHED files may still have live equality-deletes
@@ -1783,9 +1794,7 @@ class SnapshotTable:
         files, or a merge that skipped the aggregation) the choice
         falls back to copy-on-write rather than pay a Spark job.
         Returns the mode and the summary entries that record why."""
-        stats = prev.get("file_stats") or {}
-        counts = [(stats.get(rel) or {}).get("#rows") for rel in candidate_rel]
-        cand_rows = None if None in counts else int(sum(counts))
+        cand_rows = SnapshotTable._manifest_rows(prev, candidate_rel)
         src_rows = None if src_stats is None else int(src_stats["__n"])
         chosen = mode
         if mode == "auto":
@@ -1802,19 +1811,35 @@ class SnapshotTable:
         }
 
     @staticmethod
-    def _delta_file_count(
-        prev: dict[str, Any], candidate_rel: list[str], src_rows: int | None
-    ) -> int | None:
-        """Files for a merge-on-read delta of at most ``src_rows`` rows:
-        one per 128 MB at the candidate files' bytes per row (compact()'s
-        default target), and at least one. None (keep the join's
-        partitioning) when the source count is unknown."""
+    def _manifest_rows(prev: dict[str, Any], rels: list[str]) -> int | None:
+        """Total manifest ``#rows`` of ``rels``; None if any file lacks
+        stats (the count would be a guess)."""
         stats = prev.get("file_stats") or {}
-        rows = sum((stats.get(rel) or {}).get("#rows", 0) for rel in candidate_rel)
-        size = sum((stats.get(rel) or {}).get("#bytes", 0) for rel in candidate_rel)
-        if src_rows is None or rows == 0:
+        counts = [(stats.get(rel) or {}).get("#rows") for rel in rels]
+        return None if None in counts else int(sum(counts))
+
+    @staticmethod
+    def _target_file_count(
+        prev: dict[str, Any], rels: list[str], out_rows: int | None
+    ) -> int | None:
+        """Files for a row-level write of at most ``out_rows`` rows: one
+        per 128 MB (compact()'s default target) at ``rels``' bytes per
+        row, and at least one — Iceberg's ``write.target-file-size-bytes``.
+        A merge-on-read delta weighs its candidate files, a copy-on-write
+        rewrite the files it replaces. None (keep the plan's
+        partitioning) when the row bound is unknown or ``rels`` hold no
+        counted rows."""
+        stats = prev.get("file_stats") or {}
+        rows = sum((stats.get(rel) or {}).get("#rows", 0) for rel in rels)
+        size = sum((stats.get(rel) or {}).get("#bytes", 0) for rel in rels)
+        if out_rows is None or rows == 0:
             return None
-        return max(1, -(-src_rows * size // (rows * (128 << 20))))
+        return max(1, -(-out_rows * size // (rows * (128 << 20))))
+
+    @staticmethod
+    def _sized(df: DataFrame, n: int | None) -> DataFrame:
+        """``df`` coalesced (no shuffle, no extra job) to ``n`` files."""
+        return df if n is None else df.coalesce(n)
 
     @staticmethod
     def _post_images_cover_deletes(on: list[str], clause: MergeClause) -> bool:
@@ -1917,9 +1942,18 @@ class SnapshotTable:
                 .alias("t")
                 .join(k_pr, self._match("t", "k", on), "left_anti")
             )
-            new_files = self._write_files(
-                kept_rows, partition_by=snap.get("partition_by")
-            )
+            part_by = snap.get("partition_by") or None
+            if not part_by:
+                # kept rows are at most the touched rows: target-sized
+                # files, like a copy-on-write merge (a partitioned write
+                # keeps one file set per partition value instead)
+                kept_rows = self._sized(
+                    kept_rows,
+                    self._target_file_count(
+                        snap, touched_rel, self._manifest_rows(snap, touched_rel)
+                    ),
+                )
+            new_files = self._write_files(kept_rows, partition_by=part_by)
             keep = [rel for rel in snap["files"] if rel not in touched_set]
             files = keep + new_files
             # carried files may still have live equality-deletes against
@@ -2099,19 +2133,43 @@ class SnapshotTable:
         ``target_files`` overrides the size-derived file count (layout
         control for small tables). Data content is bit-identical either
         way; only the file layout changes.
+
+        A binpack of a table it cannot improve (see :meth:`_is_packed`:
+        no delete files, already the target count, unpartitioned, every
+        file written under the current schema) writes no data file and
+        runs no Spark job: it commits the same files with ``rewritten``
+        and ``added`` 0, so the version advances as after any rewrite.
+        The file count comes from the manifest's ``#bytes``.
         """
         base_version = self.current_version()
         snap = self._read_snapshot(base_version)
+        # size from the manifest; stat only files committed without stats
+        stats = snap.get("file_stats") or {}
         total_bytes = sum(
-            os.path.getsize(os.path.join(self.root, rel)) for rel in snap["files"]
+            (stats.get(rel) or {}).get("#bytes")
+            or os.path.getsize(os.path.join(self.root, rel))
+            for rel in snap["files"]
         )
         n = target_files or max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
+        part_by = snap.get("partition_by") or None
+        if strategy == "binpack" and self._is_packed(snap, n):
+            # nothing to improve: commit the same files (and sequences)
+            # without reading or writing a byte, so the version still
+            # advances exactly as a rewrite's would
+            return self._commit(
+                snap["files"],
+                "rewrite_data_files",
+                {"strategy": strategy, "rewritten": 0, "added": 0},
+                snap["schema"],
+                expected_version=base_version,
+                file_seqs=snap.get("file_seqs"),
+                partition_by=part_by,
+            )
         df = self.read(version=base_version)
         summary: dict[str, Any] = {
             "strategy": strategy,
             "rewritten": len(snap["files"]),
         }
-        part_by = snap.get("partition_by") or None
         if strategy == "zorder":
             if not zorder_by:
                 raise ValueError("strategy='zorder' requires zorder_by columns")
@@ -2164,6 +2222,35 @@ class SnapshotTable:
             expected_version=base_version,
             partition_by=part_by,
         )
+
+    def _is_packed(self, snap: dict[str, Any], n: int) -> bool:
+        """True iff a binpack rewrite of ``snap`` into ``n`` files has
+        nothing to improve (Iceberg's ``rewrite_data_files`` leaves such
+        files alone): no live delete file to materialize,
+        already ``n`` files, an unpartitioned table whose files sit in
+        no partition directory, and every file written under the
+        current schema — each file's sequence names the snapshot that
+        committed it, and a file from an older schema may still carry a
+        dropped column's bytes. A file whose snapshot is gone counts as
+        written under another schema."""
+        files = snap["files"]
+        if (
+            snap.get("delete_files")
+            or len(files) != n
+            or snap.get("partition_by")
+            or any(self._is_partitioned_rel(rel) for rel in files)
+        ):
+            return False
+        seqs = snap.get("file_seqs") or {}
+        if any(rel not in seqs for rel in files):
+            return False
+        for seq in {int(seqs[rel]) for rel in files}:
+            try:
+                if self._read_snapshot(seq)["schema"] != snap["schema"]:
+                    return False
+            except (OSError, ValueError, KeyError):
+                return False
+        return True
 
     @staticmethod
     def _zvalue(df: DataFrame, cols: list[str], bits: int) -> Column:
