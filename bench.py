@@ -17,6 +17,22 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def query_names(subset_env: str | None, registry) -> list[str]:
+    """The queries to run: every registered one, or the comma-separated
+    ``SPARK_GRAFT_QUERY_SUBSET`` (r11 verdict #1: lets the bench-contract
+    test exercise the full output contract on a smoke subset instead of
+    all 141 queries). Unset (the driver's invocation) = full corpus;
+    entries are stripped (``"q1, q2"``), and unknown names are an error
+    so a typo can't silently shrink a run."""
+    if not subset_env:
+        return sorted(registry)
+    subset = {s.strip() for s in subset_env.split(",") if s.strip()}
+    unknown = sorted(subset - set(registry))
+    if unknown:
+        raise SystemExit(f"unknown queries in SPARK_GRAFT_QUERY_SUBSET: {unknown}")
+    return sorted(subset)
+
+
 def main() -> None:
     # ambient-contention context for round-over-round adjudication (r10
     # verdict #4): a creeping per-query time on a loaded machine is
@@ -56,6 +72,7 @@ def main() -> None:
     from iceberg_evaluation_spark.plans.runner import run_benchmark
     from iceberg_evaluation_spark.session import get_spark
 
+    names = query_names(os.environ.get("SPARK_GRAFT_QUERY_SUBSET"), REGISTRY)
     extra = {"spark.scheduler.mode": "FAIR"} if threads > 1 else None
     spark = get_spark(app_name="bench", extra_conf=extra)
     # one trivial action per table: absorbs JVM/JIT/codegen warmup and
@@ -67,18 +84,6 @@ def main() -> None:
             load_table(spark, sf_dir, t).count()
         except Exception:
             pass
-    names = sorted(REGISTRY)
-    # Optional subset filter (r11 verdict #1): lets the bench-contract
-    # test exercise the full output contract on a smoke subset instead
-    # of all 141 queries. Unset (the driver's invocation) = full corpus;
-    # unknown names are an error so a typo can't silently shrink a run.
-    subset_env = os.environ.get("SPARK_GRAFT_QUERY_SUBSET")
-    if subset_env:
-        subset = [s for s in subset_env.split(",") if s.strip()]
-        unknown = sorted(set(subset) - set(REGISTRY))
-        if unknown:
-            raise SystemExit(f"unknown queries in SPARK_GRAFT_QUERY_SUBSET: {unknown}")
-        names = sorted(set(subset))
     stats = run_benchmark(
         spark,
         sf_dir,

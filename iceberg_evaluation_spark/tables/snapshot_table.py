@@ -77,6 +77,9 @@ class ConcurrentCommitError(RuntimeError):
 _INT_WIDENING = ["byte", "short", "integer", "long"]
 _FLOAT_WIDENING = ["float", "double"]
 
+# Spark's limit on explicit paths it lists on the driver (``_read_files``).
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
 
 def _cast_is_safe(src, dst) -> bool:
     """True iff casting ``src`` to ``dst`` can never NULL-out, truncate,
@@ -1013,20 +1016,24 @@ class SnapshotTable:
                 by_commit.setdefault(commit, []).append(rel)
             else:
                 plain.append(rel)
+        groups: list[tuple[str | None, list[str]]] = [(None, plain)] if plain else []
+        groups += [
+            (os.path.join(self.root, commit), group)
+            for commit, group in sorted(by_commit.items())
+        ]
+        # Spark lists more than `threshold` explicit paths with a parallel
+        # listing JOB, although the manifest already names every file: scan
+        # in chunks it lists on the driver, so building a read runs no job.
+        limit = max(1, int(self.spark.conf.get(_LISTING_THRESHOLD)))
         parts: list[DataFrame] = []
-        if plain:
-            files = [os.path.join(self.root, rel) for rel in plain]
-            parts.append(
-                self.spark.read.schema(schema).parquet(*files).select(*cols, *extra)
-            )
-        for commit, group in sorted(by_commit.items()):
-            files = [os.path.join(self.root, rel) for rel in group]
-            parts.append(
-                self.spark.read.schema(schema)
-                .option("basePath", os.path.join(self.root, commit))
-                .parquet(*files)
-                .select(*cols, *extra)  # partition cols surface last; restore order
-            )
+        for base, group in groups:
+            reader = self.spark.read.schema(schema)
+            if base is not None:
+                reader = reader.option("basePath", base)
+            for i in range(0, len(group), limit):
+                files = [os.path.join(self.root, rel) for rel in group[i : i + limit]]
+                # partition cols surface last; the select restores order
+                parts.append(reader.parquet(*files).select(*cols, *extra))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

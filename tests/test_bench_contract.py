@@ -24,6 +24,23 @@ def _smoke_subset() -> list[str]:
     return sorted(REGISTRY)[::7]
 
 
+def test_query_subset_entries_are_stripped():
+    """``"q1, q2"`` names the same queries as ``"q1,q2"``; a typo still
+    fails instead of silently shrinking the run."""
+    import pytest
+
+    sys.path.insert(0, REPO)
+    from bench import query_names
+    from iceberg_evaluation_spark.plans import REGISTRY
+
+    picked = _smoke_subset()[:3]
+    assert query_names(", ".join(picked), REGISTRY) == sorted(picked)
+    assert query_names(" , ".join(picked) + ", ", REGISTRY) == sorted(picked)
+    assert query_names(None, REGISTRY) == sorted(REGISTRY)
+    with pytest.raises(SystemExit, match="nope"):
+        query_names(f"{picked[0]}, nope", REGISTRY)
+
+
 def test_bench_final_line_is_short_and_detail_file_is_complete():
     # ITERS=1 + smoke subset (r11 verdict #1): this test checks the
     # OUTPUT CONTRACT (one short JSON line, complete per-query detail
